@@ -682,7 +682,7 @@ def _cached_micro_arr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark,
                 load_table(spark, sf_dir, "embeddings"),
                 bytes_per_task=VEC_FOLD_BYTES_PER_TASK,
-                cache_key=f"{sf_dir}/embeddings",
+                cache_key=f"{sf_dir}/embeddings.parquet",
             )
         ).persist()
     return _VEC_CACHE[key]

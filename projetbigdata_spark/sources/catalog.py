@@ -9,7 +9,14 @@ Catalyst for free, and scales to any number of files/executors.
 
 from __future__ import annotations
 
+import dataclasses
+import os
+import stat
+import threading
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -30,7 +37,116 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     into this scan by Catalyst (verify with .explain: PushedFilters)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+# Per-path memo of what the driver learns about a parquet path, so short
+# queries stop paying for it on every read:
+# - the inferred schema, per schema-inference conf values. Inference
+#   launches one footer-merge Spark job per spark.read.parquet call; on
+#   a pass over the 70 analyst queries (4-core VM) that was 127 of 382
+#   jobs and ~11 s of ~17 s operator build time, nearly all re-inferring
+#   schemas of unchanged files.
+# - parallel_scan's planned width, per bytes_per_task. Its probes —
+#   df.rdd.getNumPartitions() (physical planning + an RDD conversion)
+#   and _scan_bytes (a file listing + stat) — cost tens of ms per call,
+#   and operators load documents/embeddings several times per query
+#   (ADVICE r12). Same conf, same files: same planned split count.
+# An entry is valid only for its applicationId and for the exact file
+# fingerprint it was built from, so a rewritten path is inferred again
+# and a new session never reads another session's entries. One entry
+# per path keeps the memo bounded by the number of distinct paths read.
+@dataclasses.dataclass
+class _PathMemo:
+    app: str
+    fingerprint: tuple
+    schemas: dict[tuple, StructType] = dataclasses.field(default_factory=dict)
+    widths: dict[int | None, int | None] = dataclasses.field(default_factory=dict)
+
+
+_PATH_MEMO: dict[str, _PathMemo] = {}
+_PATH_MEMO_LOCK = threading.Lock()
+
+# Confs that change what parquet schema inference returns: an entry
+# inferred under one setting is never served under another (a
+# nanosAsLong=true schema reads TIMESTAMP(NANOS) as bigint, which must
+# fail with PARQUET_TYPE_ILLEGAL when the conf is off).
+_SCHEMA_CONFS = (
+    ("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    ("spark.sql.parquet.binaryAsString", "false"),
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+    ("spark.sql.parquet.mergeSchema", "false"),
+)
+
+
+def _is_data_name(name: str) -> bool:
+    """Spark's file-listing rule: names starting with '.' or '_' (bar
+    partition directories like `_k=v`) are not data."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """Sorted (relative name, size, mtime_ns) of every data file under a
+    local parquet path (file or directory). None when the path is not a
+    plain local one (object-store URI, glob) or cannot be listed — such
+    paths are never memoized."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file") or any(c in path for c in "*?[{"):
+        return None
+    local = url.path if url.scheme else path
+
+    def fail(err: OSError) -> None:
+        raise err
+
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for d, dirs, names in os.walk(local, onerror=fail, followlinks=True):
+            dirs[:] = [x for x in dirs if _is_data_name(x)]
+            for n in names:
+                if _is_data_name(n):
+                    f = os.path.join(d, n)
+                    st = os.stat(f)
+                    files.append((os.path.relpath(f, local), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _path_memo(spark: SparkSession, path: str) -> _PathMemo | None:
+    """The memo entry for ``path`` as its files are now, created empty
+    when there is none or the files changed; None when the path cannot
+    be fingerprinted."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return None
+    app = spark.sparkContext.applicationId
+    with _PATH_MEMO_LOCK:
+        entry = _PATH_MEMO.get(path)
+        if entry is None or entry.app != app or entry.fingerprint != fp:
+            for stale in [p for p, e in _PATH_MEMO.items() if e.app != app]:
+                del _PATH_MEMO[stale]
+            entry = _PATH_MEMO[path] = _PathMemo(app, fp)
+        return entry
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema of unchanged
+    files only once per session: later reads pass the memoized schema,
+    which skips the footer-merge job. Paths that cannot be fingerprinted
+    read exactly as spark.read.parquet does."""
+    entry = _path_memo(spark, path)
+    if entry is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, dflt) for k, dflt in _SCHEMA_CONFS)
+    schema = entry.schemas.get(confs)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    entry.schemas[confs] = df.schema
+    return df
 
 
 BUCKET_KEYS = {
@@ -39,6 +155,11 @@ BUCKET_KEYS = {
     "customer": "c_custkey",
 }
 N_BUCKETS = 8
+
+
+# first-touch locks of ensure_bucketed, one per bucketed table name
+_BUCKET_LOCKS: dict[str, threading.Lock] = {}
+_BUCKET_LOCKS_LOCK = threading.Lock()
 
 
 def _bucketed_name(sf_dir: str, name: str) -> str:
@@ -71,15 +192,22 @@ def ensure_bucketed(
         raise KeyError(f"no bucket key declared for {name!r}")
     tbl = _bucketed_name(sf_dir, name)
     if not spark.catalog.tableExists(tbl):
-        writer = (
-            load_table(spark, sf_dir, name)
-            .write.bucketBy(n_buckets, BUCKET_KEYS[name])
-            .sortBy(BUCKET_KEYS[name])
-            .mode("overwrite")
-        )
-        if path_root:
-            writer = writer.option("path", f"{path_root}/{tbl}")
-        writer.saveAsTable(tbl)
+        # two concurrent first calls would both write the table (one
+        # then fails under _temporary or with TABLE_OR_VIEW_ALREADY_
+        # EXISTS): the first writes, the others wait and reuse it
+        with _BUCKET_LOCKS_LOCK:
+            lock = _BUCKET_LOCKS.setdefault(tbl, threading.Lock())
+        with lock:
+            if not spark.catalog.tableExists(tbl):
+                writer = (
+                    load_table(spark, sf_dir, name)
+                    .write.bucketBy(n_buckets, BUCKET_KEYS[name])
+                    .sortBy(BUCKET_KEYS[name])
+                    .mode("overwrite")
+                )
+                if path_root:
+                    writer = writer.option("path", f"{path_root}/{tbl}")
+                writer.saveAsTable(tbl)
     return spark.table(tbl)
 
 
@@ -103,7 +231,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one source of truth. nanosAsLong is set only when the file really
     # is TIMESTAMP(NANOS): probe first, set the legacy conf on failure.
     try:
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        raw = read_parquet(spark, f"{sf_dir}/events.parquet")
         raw.schema  # force footer read under the current conf
     except Exception as e:
         # only the TIMESTAMP(NANOS) footer failure earns the legacy
@@ -132,24 +260,11 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not is_nanos:
             raise
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        raw = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = raw.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):  # nanos-as-long legacy layout
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-# Planned width decisions memoized per (applicationId, table path):
-# parallel_scan's two driver-side probes — df.rdd.getNumPartitions()
-# (forces physical planning + an RDD conversion) and _scan_bytes (a
-# file listing + stat) — cost tens of ms per call, and operators load
-# documents/embeddings several times per query (ADVICE r12). The
-# decision is deterministic per (app, files): same conf, same files,
-# same planned split count — so the wrappers below pass a cache key
-# and later loads skip both probes entirely. Values: the repartition
-# width, or None for pass-through. Keyed on applicationId like
-# similarity._VEC_CACHE so a new session never reads stale widths.
-_WIDTH_CACHE: dict[tuple[str, str, int | None], int | None] = {}
 
 
 def parallel_scan(
@@ -186,23 +301,23 @@ def parallel_scan(
     from data size (ceil(scan_bytes / bytes_per_task), still capped at
     defaultParallelism), so it grows to full width on bigger inputs
     rather than encoding either mode's constant.
+
+    ``cache_key`` is the parquet path ``df`` scans, unfiltered: the
+    width (or None for pass-through) is memoized in that path's memo
+    entry until its files change (see _PathMemo).
     """
-    key = None
-    if cache_key is not None:
-        key = (spark.sparkContext.applicationId, cache_key, bytes_per_task)
-        if key in _WIDTH_CACHE:
-            width = _WIDTH_CACHE[key]
-            return df if width is None else df.repartition(width)
+    entry = None if cache_key is None else _path_memo(spark, cache_key)
+    if entry is not None and bytes_per_task in entry.widths:
+        width = entry.widths[bytes_per_task]
+        return df if width is None else df.repartition(width)
     target = spark.sparkContext.defaultParallelism
     if bytes_per_task is not None:
         size = _scan_bytes(df)
         if size is not None:
             target = min(target, max(1, -(-size // bytes_per_task)))
     width = None if df.rdd.getNumPartitions() >= target else target
-    if key is not None:
-        for stale in [k for k in _WIDTH_CACHE if k[0] != key[0]]:
-            del _WIDTH_CACHE[stale]
-        _WIDTH_CACHE[key] = width
+    if entry is not None:
+        entry.widths[bytes_per_task] = width
     return df if width is None else df.repartition(width)
 
 
@@ -212,9 +327,6 @@ def _scan_bytes(df: DataFrame) -> int | None:
     input is not a local file (deployment object stores) — callers
     then fall back to full-width, which the >=-partitions guard in
     parallel_scan neutralizes on real multi-split tables anyway."""
-    import os as _os
-    from urllib.parse import unquote, urlparse
-
     total = 0
     try:
         files = df.inputFiles()
@@ -229,7 +341,7 @@ def _scan_bytes(df: DataFrame) -> int | None:
             # raise — which silently disabled the bytes_per_task cap
             # (full-width fan-out, the configuration the r12 sweep
             # measured as SLOWER for the iterative tiers). ADVICE r12.
-            total += _os.path.getsize(unquote(urlparse(f).path))
+            total += os.path.getsize(unquote(urlparse(f).path))
         except (OSError, ValueError):
             return None
     return total
@@ -265,7 +377,7 @@ def load_documents_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         load_table(spark, sf_dir, "documents"),
         bytes_per_task=DOC_BYTES_PER_TASK,
-        cache_key=f"{sf_dir}/documents",
+        cache_key=f"{sf_dir}/documents.parquet",
     )
 
 
@@ -285,7 +397,7 @@ def load_embeddings_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         load_table(spark, sf_dir, "embeddings"),
         bytes_per_task=VEC_FOLD_BYTES_PER_TASK,
-        cache_key=f"{sf_dir}/embeddings",
+        cache_key=f"{sf_dir}/embeddings.parquet",
     )
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projetbigdata_spark.session import tune
+from projetbigdata_spark.sources.catalog import read_parquet
 
 
 EVENTS_RAW_SCHEMA = (
@@ -58,9 +59,11 @@ def open_events_stream(spark: SparkSession, source: dict) -> DataFrame:
         # later reader in the session (same hygiene as
         # sources/catalog.load_events). An empty or not-yet-created
         # directory (watch-before-first-file) falls back to the nanos
-        # layout the fixtures use.
+        # layout the fixtures use. read_parquet memoizes the footer per
+        # file fingerprint, so repeated set-ups on unchanged files launch
+        # no schema job.
         try:
-            ts_physical = spark.read.parquet(source["path"]).schema["ts"].dataType
+            ts_physical = read_parquet(spark, source["path"]).schema["ts"].dataType
         except Exception:
             if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true":
                 ts_physical = T.LongType()  # empty/missing dir, conf already legacy
@@ -68,7 +71,7 @@ def open_events_stream(spark: SparkSession, source: dict) -> DataFrame:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
                 try:  # PARQUET_TYPE_ILLEGAL on TIMESTAMP(NANOS) -> retry as long
                     ts_physical = (
-                        spark.read.parquet(source["path"]).schema["ts"].dataType
+                        read_parquet(spark, source["path"]).schema["ts"].dataType
                     )
                     if not isinstance(ts_physical, T.LongType):
                         # first probe failed for a non-nanos reason

@@ -117,3 +117,60 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     )
     assert joined.subtract(plain).count() == 0
     assert plain.subtract(joined).count() == 0
+
+
+def test_bucketed_join_first_touch_from_two_threads(spark, tmp_path):
+    """Two clients make the first call of join_bucketed_priority_counts
+    on one fresh directory at the same time: each bucketed table is
+    written once and both results match the oracle."""
+    import os
+    import shutil
+    import threading
+
+    import duckdb
+
+    from projetbigdata_spark.operators import relational3
+    from projetbigdata_spark.sources.catalog import _bucketed_name
+    from tests.conftest import TABLES, assert_matches_oracle
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    barrier = threading.Barrier(2)
+    frames, errors = [], []
+
+    def client():
+        try:
+            barrier.wait()
+            df = relational3.join_bucketed_priority_counts(spark, sf)
+            df.collect()
+            frames.append(df)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client) for _ in range(2)]
+    con = duckdb.connect()
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert errors == [] and len(frames) == 2
+        for t in TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+            )
+        for df in frames:
+            assert_matches_oracle(
+                df, con, relational3.BUCKETED_JOIN_SQL, "join_bucketed_priority_counts"
+            )
+    finally:
+        con.close()
+        # the query pins its tables under <repo>/spark-warehouse
+        wh = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "spark-warehouse",
+        )
+        for name in ("orders", "lineitem"):
+            tbl = _bucketed_name(sf, name)
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)

@@ -53,7 +53,7 @@ def main() -> None:
     results: dict[int, dict[str, float]] = {}
     for w in widths:
         catalog.DOC_BYTES_PER_TASK = max(1, -(-doc_bytes // w))
-        catalog._WIDTH_CACHE.clear()
+        catalog._PATH_MEMO.clear()
         row: dict[str, float] = {}
         for name in QUERIES_TO_TIME:
             best = float("inf")
